@@ -15,19 +15,6 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Id floor separating normal testdata from the adversarial docs/events/
@@ -45,7 +32,9 @@ EDGE_ID_FLOOR = 900000
 # which Spark reads natively; earlier generations carried TIMESTAMP(NANOS)
 # and needed a raw-long read + /1000 convert. Pinning the schema here keeps
 # a future regen honest: a NANOS flip fails the read loudly (type
-# mismatch) instead of silently shifting every timestamp 1000×.
+# mismatch) instead of silently shifting every timestamp 1000×. ts is
+# deliberately TimestampType, not the TIMESTAMP_NTZ the footer infers:
+# every events consumer, batch and streaming, is written against it.
 EVENTS_RAW_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType(), True),
@@ -58,16 +47,81 @@ EVENTS_RAW_SCHEMA = T.StructType(
 )
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan — Catalyst handles column pruning + predicate pushdown.
+def _nullable(*fields: tuple[str, T.DataType]) -> T.StructType:
+    return T.StructType([T.StructField(n, t, True) for n, t in fields])
 
-    events reads under the pinned EVENTS_RAW_SCHEMA (see its comment);
-    every other table infers from the parquet footer."""
-    if name == "events":
-        return spark.read.schema(EVENTS_RAW_SCHEMA).parquet(
-            os.path.join(sf_dir, f"{name}.parquet")
-        )
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+_INT, _LONG, _DOUBLE, _STR = T.IntegerType(), T.LongType(), T.DoubleType(), T.StringType()
+
+# Declared reader schema per source table — the ONE definition of the
+# testdata layout. Each equals what a default session infers from the
+# parquet footer (all fields nullable; the date columns are
+# TIMESTAMP_NTZ), except events' pinned ts (above). Reading under a
+# declared schema skips footer inference, which otherwise runs one Spark
+# job per table per query build. A column retyped incompatibly fails the
+# read; tests/test_testdata_invariants.py checks every sf dir's footers
+# against these, which also catches a renamed or dropped column (that
+# one would otherwise read as NULL).
+TESTDATA_SCHEMAS: dict[str, T.StructType] = {
+    "region": _nullable(("r_regionkey", _INT), ("r_name", _STR)),
+    "nation": _nullable(("n_nationkey", _INT), ("n_name", _STR), ("n_regionkey", _INT)),
+    "customer": _nullable(
+        ("c_custkey", _LONG),
+        ("c_name", _STR),
+        ("c_nationkey", _INT),
+        ("c_acctbal", _DOUBLE),
+        ("c_mktsegment", _STR),
+    ),
+    "supplier": _nullable(
+        ("s_suppkey", _LONG), ("s_name", _STR), ("s_nationkey", _INT), ("s_acctbal", _DOUBLE)
+    ),
+    "part": _nullable(
+        ("p_partkey", _LONG),
+        ("p_name", _STR),
+        ("p_brand", _STR),
+        ("p_type", _STR),
+        ("p_size", _INT),
+        ("p_retailprice", _DOUBLE),
+    ),
+    "orders": _nullable(
+        ("o_orderkey", _LONG),
+        ("o_custkey", _LONG),
+        ("o_orderstatus", _STR),
+        ("o_totalprice", _DOUBLE),
+        ("o_orderdate", T.TimestampNTZType()),
+        ("o_orderpriority", _STR),
+    ),
+    "lineitem": _nullable(
+        ("l_orderkey", _LONG),
+        ("l_partkey", _LONG),
+        ("l_suppkey", _LONG),
+        ("l_linenumber", _INT),
+        ("l_quantity", _DOUBLE),
+        ("l_extendedprice", _DOUBLE),
+        ("l_discount", _DOUBLE),
+        ("l_tax", _DOUBLE),
+        ("l_returnflag", _STR),
+        ("l_linestatus", _STR),
+        ("l_shipdate", T.TimestampNTZType()),
+    ),
+    "events": EVENTS_RAW_SCHEMA,
+    "documents": _nullable(
+        ("doc_id", _LONG), ("text", _STR), ("lang", _STR), ("source", _STR), ("n_chars", _LONG)
+    ),
+    "embeddings": _nullable(
+        ("vec_id", _LONG), ("embedding", T.ArrayType(T.FloatType(), True)), ("label", _INT)
+    ),
+}
+TESTDATA_TABLES = tuple(TESTDATA_SCHEMAS)
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Parquet scan under the table's declared schema (TESTDATA_SCHEMAS):
+    building the frame starts no Spark job; Catalyst still prunes
+    columns and pushes predicates into the scan."""
+    return spark.read.schema(TESTDATA_SCHEMAS[name]).parquet(
+        os.path.join(sf_dir, f"{name}.parquet")
+    )
 
 
 @dataclass
@@ -92,9 +146,9 @@ def register_views(
     spark: SparkSession, sf_dir: str, tables: tuple[str, ...] | None = None
 ) -> None:
     """Register testdata tables as temp views for ``spark.sql``. Pass the
-    subset a query actually reads — view registration opens every parquet
-    footer, so registering all ten tables for a one-table query is pure
-    overhead."""
+    subset a query actually reads: each view still lists its table's
+    files and analyses a scan, so registering all ten tables for a
+    one-table query is wasted planning work."""
     for name in tables or TESTDATA_TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 

@@ -467,12 +467,17 @@ def ngram_jaccard_pairs(
     materialized with an eager localCheckpoint so nothing (cache or
     multiply-referenced lineage) stays resident in the caller's session
     (plans.library.materialized). Pass ``shingles`` (a cached
-    ``shingle_frame``) only when the caller is ALREADY amortizing the
+    ``shingle_frame``, string ``w`` or already folded to bigint ``w``)
+    only when the caller is ALREADY amortizing the
     explode across another consumer; the self-built candidates path
     computes per-doc shingle arrays in-row instead (shingle_set_col — no
     explode, no groupBy(doc) exchange, r15)."""
     from itdb_spark.plans.library import materialized, truncate_lineage
 
+    if shingles is not None and dict(shingles.dtypes).get("w") != "bigint":
+        # fold string shingles to xxhash64 longs; a pre-folded (doc,
+        # bigint w) frame is used as is (containment_join's guard)
+        shingles = shingles.select("doc", F.xxhash64("w").alias("w"))
     if candidates is not None:
         # per-doc hash ARRAYS, intersected per candidate row — replaces
         # the exploded (pair x shingle) join+groupBy: same-session A/B
@@ -487,9 +492,7 @@ def ngram_jaccard_pairs(
             # caller-shared cached explode: fold + collect per doc (the
             # pre-r15 shape; the caller is amortizing the explode across
             # the candidate stage, so consume it rather than re-shingle)
-            arrs = shingles.select(
-                "doc", F.xxhash64("w").alias("w")
-            ).groupBy("doc").agg(F.collect_list("w").alias("ws"))
+            arrs = shingles.groupBy("doc").agg(F.collect_list("w").alias("ws"))
         else:
             # r15: the shingle-hash array is a PER-ROW fact, so the
             # self-built path computes it in-row (shingle_set_col — no
@@ -532,10 +535,11 @@ def ngram_jaccard_pairs(
         # corpora/tests only): keeps the exploded form — the self-join IS
         # over exploded rows. words feeds 4 references (a/b/sa/sb), so the
         # r14 checkpoint discipline stays.
-        base = (
-            shingles if shingles is not None else shingle_frame(docs, id_col, text_col)
-        )
-        words = truncate_lineage(base.select("doc", F.xxhash64("w").alias("w")))
+        if shingles is None:
+            shingles = shingle_frame(docs, id_col, text_col).select(
+                "doc", F.xxhash64("w").alias("w")
+            )
+        words = truncate_lineage(shingles.select("doc", "w"))
         sizes = words.groupBy("doc").agg(F.count("*").alias("sz"))
         a = words.alias("a")
         b = words.alias("b")

@@ -344,11 +344,14 @@ def materialized(result: DataFrame, *caches: DataFrame) -> DataFrame:
     garbage-collected driver-side (localCheckpoint path; reliable
     checkpoint files live until ``spark.cleaner.referenceTracking.
     cleanCheckpoints`` or job teardown removes them). The local/reliable
-    choice follows ``truncate_lineage``'s auto-detection."""
-    out = truncate_lineage(result, eager=True)
-    for c in caches:
-        c.unpersist()
-    return out
+    choice follows ``truncate_lineage``'s auto-detection. The caches are
+    released whether or not the checkpoint succeeds: a failed job must
+    not leave them pinned either."""
+    try:
+        return truncate_lineage(result, eager=True)
+    finally:
+        for c in caches:
+            c.unpersist()
 
 
 def write_bucketed(

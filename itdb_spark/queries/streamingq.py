@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from itdb_spark.catalog import Tables
+from itdb_spark.catalog import TESTDATA_SCHEMAS, Tables, load_table
 from itdb_spark.queries import register
 from itdb_spark.queries.pipeline import (
     _BLOOM_ORACLE,
@@ -18,23 +18,6 @@ from itdb_spark.queries.pipeline import (
     _minhash_bands_ctes,
     ORACLE_CORPUS,
 )
-
-
-def _docs_schema():
-    """Pinned documents reader schema for the streaming twins — ONE home
-    (three byte-identical locals predated it; a future column change
-    edits here and catalog.py only). Built lazily: StructType is cheap
-    but keeping the factory form matches the module's no-module-level-
-    Column rule."""
-    from pyspark.sql import types as T
-
-    return T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ])
 
 
 @register(
@@ -466,10 +449,9 @@ def stream_cms_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from itdb_spark.functions.core import portable_hash64
 
-    docs_schema = _docs_schema()
     stream = (
         spark.readStream.format("parquet")
-        .schema(docs_schema)
+        .schema(TESTDATA_SCHEMAS["documents"])
         .option("pathGlobFilter", "documents.parquet")
         .load(sf_dir)
     )
@@ -502,8 +484,7 @@ def stream_cms_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     # point queries against the streamed cells: exact top-20 from the
     # same table batch-side (the sketch answers, the exact side grades)
     toks = (
-        spark.read.schema(docs_schema)
-        .parquet(f"{sf_dir}/documents.parquet")
+        load_table(spark, sf_dir, "documents")
         .where(F.length(F.trim("text")) > 0)
         .select(F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("w"))
     )
@@ -549,10 +530,9 @@ def stream_bloom_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         _bloom_sketch,
     )
 
-    docs_schema = _docs_schema()
     stream = (
         spark.readStream.format("parquet")
-        .schema(docs_schema)
+        .schema(TESTDATA_SCHEMAS["documents"])
         .option("pathGlobFilter", "documents.parquet")
         .load(sf_dir)
     )
@@ -571,7 +551,7 @@ def stream_bloom_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.stop()
     sketch = spark.table("stream_bloom_words")
 
-    base = spark.read.schema(docs_schema).parquet(f"{sf_dir}/documents.parquet")
+    base = load_table(spark, sf_dir, "documents")
     docs = base.select("doc_id", "source", F.md5("text").alias("fp"))
     return _bloom_report(docs, _bloom_probes(base), sketch)
 
@@ -681,10 +661,9 @@ def stream_ewma_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_linreg_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
-    docs_schema = _docs_schema()
     stream = (
         spark.readStream.format("parquet")
-        .schema(docs_schema)
+        .schema(TESTDATA_SCHEMAS["documents"])
         .option("pathGlobFilter", "documents.parquet")
         .load(sf_dir)
     )
@@ -1247,16 +1226,10 @@ def stream_ann_ingest_live(spark: SparkSession, sf_dir: str) -> DataFrame:
                 vacuum_min_age_s=0,
             )
 
-        from pyspark.sql import types as T
-
-        schema = T.StructType([
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-            T.StructField("label", T.IntegerType()),
-        ])
+        # the staged files are embeddings rows: read under its catalog schema
         stream = (
             spark.readStream.format("parquet")
-            .schema(schema)
+            .schema(TESTDATA_SCHEMAS["embeddings"])
             .option("maxFilesPerTrigger", "1")
             .load(stage)
         )
@@ -1336,18 +1309,10 @@ def stream_knn_live(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.join(results, f"b{batch_id}")
             )
 
-        from pyspark.sql import types as T
-
-        # pinned to the parquet's physical types (float32 vectors, int
-        # labels — the vectorized reader refuses a widening schema)
-        schema = T.StructType([
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-            T.StructField("label", T.IntegerType()),
-        ])
+        # the staged files are embeddings rows: read under its catalog schema
         stream = (
             spark.readStream.format("parquet")
-            .schema(schema)
+            .schema(TESTDATA_SCHEMAS["embeddings"])
             .option("maxFilesPerTrigger", "1")
             .load(stage)
         )

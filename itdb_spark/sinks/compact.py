@@ -44,7 +44,7 @@ import math
 import os
 import shutil
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -79,11 +79,17 @@ def _content_checksum(spark: SparkSession, path: str) -> tuple[int, str]:
     (round-8 ADVICE: count parity alone guarded deleting the only
     original copy)."""
     df = spark.read.parquet(path)
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")).alias("ck"),
-    ).collect()[0]
+    row = df.agg(*content_checksum_aggs(df.columns)).collect()[0]
     return int(row["n"]), str(row["ck"])
+
+
+def content_checksum_aggs(cols: list[str]) -> tuple[Column, Column]:
+    """The (n, ck) aggregate columns behind _content_checksum, over
+    ``cols`` in the given order (the hash is order-sensitive)."""
+    return (
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("ck"),
+    )
 
 
 def _recover(path: str) -> None:

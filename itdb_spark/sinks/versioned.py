@@ -48,8 +48,9 @@ import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from itdb_spark.sinks.compact import _content_checksum, parquet_file_stats
+from itdb_spark.sinks.compact import _content_checksum, content_checksum_aggs
 
 # vacuum's default retention floor (seconds): a superseded version dir
 # younger than this is never swept, whatever ``keep`` says — it may
@@ -400,10 +401,22 @@ def compact_version(
     gates compact_parquet uses (row count + full content checksum) —
     but with zero crash window and no reader disruption, because
     nothing is renamed or deleted. Returns the compact_parquet-shaped
-    stats dict plus the new version name."""
+    stats dict plus the new version name.
+
+    Only for a table whose published version has no append ancestry:
+    the rewrite reads the head dir alone, so on an append chain it
+    would publish the newest delta as the whole table. Chains are
+    refused with a ValueError; fold them with ``compact_chain``."""
     v = current_version(root)
     if v is None:
         raise FileNotFoundError(f"no published version at {root!r}")
+    links = chain_versions(root)
+    if len(links) > 1:
+        raise ValueError(
+            f"compact_version rewrites only the head dir, but {root!r} is "
+            f"an append chain of {len(links)} links {links}; use "
+            "compact_chain to fold it"
+        )
     src_path = os.path.join(root, v)
     files_before, bytes_before = _tree_parquet_stats(src_path)
     n_out = max(1, math.ceil(bytes_before / target_bytes))
@@ -579,13 +592,13 @@ def compact_chain(
     half of the append story (a chain grows one dir per accepted batch;
     compaction resets read amplification and makes the old links
     vacuum-eligible, since the replace version has no parent). Publishes
-    only after the SAME parity gates compact_version uses — exploiting
-    that the content checksum is a SUM, hence exactly additive across
-    the chain's disjoint delta dirs: expected (rows, checksum) is the
-    per-dir sum, compared against the rewritten dir before the pointer
-    moves. On mismatch the pointer is rolled back and the bad dir
-    dropped — the chain was never touched. Returns the compact_version-
-    shaped stats dict plus the folded chain.
+    only after the SAME parity gates compact_version uses (row count +
+    order-insensitive content checksum), computed in ONE grouped
+    aggregate over the chain and the rewritten dir (_chain_fold_parity)
+    — the fold's job count does not grow with the chain's length. On
+    mismatch the pointer is rolled back and the bad dir dropped — the
+    chain was never touched. Returns the compact_version-shaped stats
+    dict plus the folded chain.
 
     ``partition_by`` defaults to the NEWEST data dir's detected hive
     layout (ADVICE r12: a plain rewrite of a band-/kind-partitioned
@@ -602,41 +615,34 @@ def compact_chain(
     dirs = [d for d in chain_versions(root) if _has_data(root, d)]
     if partition_by is None and dirs:
         partition_by = _detect_partition_cols(root, dirs[0]) or None
-    rows_before, ck_before = 0, 0
     files_before, bytes_before = 0, 0
     for d in dirs:
-        path = os.path.join(root, d)
-        r, ck = _content_checksum(spark, path)
-        rows_before += r
-        # a delta dir can hold a ZERO-ROW parquet file (an empty frame
-        # with a non-empty task layout still writes a part file) — its
-        # checksum is SQL NULL, which contributes 0 to the additive sum
-        ck_before += int(ck) if r else 0
-        f, b = _tree_parquet_stats(path)
+        f, b = _tree_parquet_stats(os.path.join(root, d))
         files_before += f
         bytes_before += b
     n_out = max(1, math.ceil(bytes_before / target_bytes))
-    folded = read_current_chain(spark, root)
+    chain = read_current_chain(spark, root)
     # fold the chain's idempotency tags forward — compaction must not
     # reopen the at-least-once replay window for already-accepted
     # batches (their data survives in the folded version; so must the
     # markers that say so)
     folded_tags = chain_tags(root)
     if partition_by:
-        folded = folded.repartition(n_out, *partition_by)
         new_v = write_version(
-            folded, root, partition_by=partition_by, tags=folded_tags,
+            chain.repartition(n_out, *partition_by), root,
+            partition_by=partition_by, tags=folded_tags,
             writer_options=writer_options,
         )
     else:
         new_v = write_version(
-            folded, root, n_files=n_out, tags=folded_tags,
+            chain, root, n_files=n_out, tags=folded_tags,
             writer_options=writer_options,
         )
     new_path = os.path.join(root, new_v)
-    rows_after, ck_after = _content_checksum(spark, new_path)
-    ck_after_int = int(ck_after) if rows_after else 0
-    if (rows_after, ck_after_int) != (rows_before, ck_before):
+    (rows_before, ck_before), (rows_after, ck_after) = _chain_fold_parity(
+        chain, spark.read.schema(chain.schema).parquet(new_path)
+    )
+    if (rows_after, ck_after) != (rows_before, ck_before):
         _publish(root, cur)
         shutil.rmtree(new_path)
         raise RuntimeError(
@@ -653,3 +659,22 @@ def compact_chain(
         "version": new_v,
         "folded_chain": dirs,
     }
+
+
+def _chain_fold_parity(
+    chain: DataFrame, folded: DataFrame
+) -> tuple[tuple[int, int], tuple[int, int]]:
+    """(rows, checksum) of the old chain and of its folded rewrite, from
+    ONE grouped aggregate over their union — the _content_checksum
+    checksum, with both sides hashed in the chain's column order.
+    ``folded`` must be read under ``chain.schema`` so no footer
+    inference runs; a side with no rows reports (0, 0)."""
+    cols = chain.columns
+    both = chain.withColumn("_side", F.lit(0)).unionByName(
+        folded.select(*cols).withColumn("_side", F.lit(1))
+    )
+    got = {
+        r["_side"]: (int(r["n"]), int(r["ck"] or 0))
+        for r in both.groupBy("_side").agg(*content_checksum_aggs(cols)).collect()
+    }
+    return got.get(0, (0, 0)), got.get(1, (0, 0))

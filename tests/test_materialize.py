@@ -80,6 +80,25 @@ def test_materialized_releases_caches(spark):
     }
 
 
+def test_materialized_releases_caches_when_checkpoint_fails(spark):
+    """A checkpoint that fails at execution still unpersists the caches
+    handed to materialized(): a long-lived session must not keep them
+    pinned after the error."""
+    import pytest
+
+    from itdb_spark.plans.library import materialized
+
+    base = spark.range(100).select((F.col("id") + 1000).alias("v")).cache()
+    base.count()
+    bad = base.select(
+        F.when(F.col("v") > 1050, F.raise_error(F.lit("boom"))).otherwise(F.col("v")).alias("v")
+    )
+    assert base.is_cached
+    with pytest.raises(Exception, match="boom"):
+        materialized(bad, base)
+    assert not base.is_cached
+
+
 def test_schema_evolution_read_postures(spark, tmp_path):
     """A 100 TB lake accretes files written under EVOLVING schemas (a
     column added mid-year). Two read postures, both pinned here:

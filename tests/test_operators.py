@@ -129,6 +129,39 @@ def test_minhash_finds_planted_near_dups(spark):
     assert planted <= vpairs
 
 
+def test_ngram_jaccard_pairs_prefolded_shingles(spark):
+    """A caller may pass its cached shingle frame already folded to
+    bigint ``w`` (containment_join accepts the same); ngram_jaccard_pairs
+    then uses the ids as they are, and both the candidates and the
+    exhaustive arm give the same pairs as for the string frame."""
+    from itdb_spark.operators.dedup import (
+        minhash_candidates,
+        ngram_jaccard_pairs,
+        shingle_frame,
+    )
+
+    base = [(i, " ".join(f"tok{(i * 31 + j * 7) % 97}" for j in range(40))) for i in range(20)]
+    near = [(i + 100, t.split(" ", 1)[1]) for i, t in base]
+    docs = spark.createDataFrame(base + near, "doc_id long, text string")
+    strings = shingle_frame(docs, "doc_id", "text")
+    folded = strings.select("doc", F.xxhash64("w").alias("w"))
+    assert dict(folded.dtypes)["w"] == "bigint"
+    cands = minhash_candidates(docs, "doc_id", "text")
+    for kw in ({"candidates": cands}, {}):
+        got = [
+            {
+                tuple(r)
+                for r in ngram_jaccard_pairs(
+                    docs, "doc_id", "text", shingles=sh, **kw
+                ).collect()
+            }
+            for sh in (strings, folded)
+        ]
+        assert got[0] == got[1] and {(i, i + 100) for i in range(20)} <= {
+            (a, b) for a, b, _ in got[0]
+        }
+
+
 def test_simhash_near_dup_distance(spark):
     from itdb_spark.operators.dedup import simhash
 

@@ -76,3 +76,27 @@ def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
     assert set(df.columns) == {"playlist", "stars", "cnt"}
+
+
+# Report and search queries whose frames build with no Spark job: every
+# source table reads under its declared catalog schema, so building a
+# query never runs a footer-inference job.
+NO_JOB_CONSTRUCTION = [
+    "agg-hist-genre",
+    "agg-pl-stats",
+    "join-pt",
+    "join-setdiff",
+    "win-topk-group",
+    "emb-cov",
+    "mm-pixeldedup",
+]
+
+
+@pytest.mark.parametrize("qid", NO_JOB_CONSTRUCTION)
+def test_query_construction_runs_no_spark_job(spark, qid):
+    from itdb_spark.queries import load_all
+    from tests.conftest import spark_jobs
+
+    df, n_jobs = spark_jobs(spark, lambda: load_all()[qid].spark(spark, SF_DIR))
+    assert n_jobs == 0, f"{qid}: building the frame ran {n_jobs} Spark job(s)"
+    assert df.columns

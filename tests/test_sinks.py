@@ -378,3 +378,83 @@ def test_versioned_table_schema_gate(spark, tmp_path):
         spark.range(0, 10).selectExpr("id"), root, enforce_schema=False
     )
     assert V.current_version(root) == "v3"
+
+
+def _kv_chain(spark, root, n_links):
+    """A versioned (k long, v string) table: a 100-row base plus
+    ``n_links - 1`` appended 10-row deltas."""
+    from itdb_spark.sinks import versioned as V
+
+    V.write_version(spark.range(100).selectExpr("id AS k", "cast(id AS string) AS v"), root)
+    for i in range(1, n_links):
+        V.append_version(
+            spark.range(100 * i, 100 * i + 10).selectExpr(
+                "id AS k", "cast(id AS string) AS v"
+            ),
+            root,
+        )
+
+
+def test_compact_version_refuses_append_chain(spark, tmp_path):
+    """compact_version rewrites the head dir alone; on an append chain
+    that would publish the newest delta as the whole table (v1's 100
+    rows + v2's 10 → 10). It must refuse and name compact_chain, and
+    leave the table untouched."""
+    import os
+
+    import pytest
+
+    from itdb_spark.sinks import versioned as V
+
+    root = str(tmp_path / "chain")
+    _kv_chain(spark, root, 2)
+    with pytest.raises(ValueError, match="compact_chain"):
+        V.compact_version(spark, root, target_bytes=10**12)
+    assert V.chain_versions(root) == ["v2", "v1"]
+    assert not os.path.exists(os.path.join(root, "v3"))
+    assert V.read_current_chain(spark, root).count() == 110
+
+
+def test_compact_chain_rejects_bad_fold(spark, tmp_path, monkeypatch):
+    """A fold whose rewrite keeps the row count but changes content must
+    fail the parity gate: RuntimeError, manifest still on the old head,
+    the bad version dir removed, and the chain reading as before."""
+    import os
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    from itdb_spark.sinks import versioned as V
+
+    root = str(tmp_path / "chain")
+    _kv_chain(spark, root, 3)
+    before = sorted(tuple(r) for r in V.read_current_chain(spark, root).collect())
+    real_write = V.write_version
+
+    def corrupting_write(df, root, **kw):
+        return real_write(df.withColumn("v", F.concat("v", F.lit("!"))), root, **kw)
+
+    monkeypatch.setattr(V, "write_version", corrupting_write)
+    with pytest.raises(RuntimeError, match="chain compaction parity mismatch"):
+        V.compact_chain(spark, root)
+    assert V.current_version(root) == "v3"
+    assert not os.path.exists(os.path.join(root, "v4"))
+    assert V.chain_versions(root) == ["v3", "v2", "v1"]
+    assert sorted(tuple(r) for r in V.read_current_chain(spark, root).collect()) == before
+
+
+def test_compact_chain_job_count_independent_of_chain_length(spark, tmp_path):
+    """The fold's parity check is one aggregate over the whole chain and
+    the rewrite, so folding a 6-link chain starts no more Spark jobs than
+    folding a 2-link one."""
+    from itdb_spark.sinks import versioned as V
+    from tests.conftest import spark_jobs
+
+    jobs = {}
+    for n_links in (2, 6):
+        root = str(tmp_path / f"chain{n_links}")
+        _kv_chain(spark, root, n_links)
+        stats, jobs[n_links] = spark_jobs(spark, lambda: V.compact_chain(spark, root))
+        assert stats["rows"] == 100 + 10 * (n_links - 1)
+        assert V.read_current_chain(spark, root).count() == stats["rows"]
+    assert jobs[2] == jobs[6], jobs

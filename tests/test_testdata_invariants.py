@@ -9,6 +9,9 @@ instead of degrading the gate to vacuous-green."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -292,3 +295,28 @@ def test_stat_degenerate_denominators_null_both_engines(spark):
             "agg-zipf": "zipf_slope",
         }[qid]
         assert row[stat_col] is None, (qid, row)
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_declared_schemas_match_footers(spark, sf):
+    """catalog.TESTDATA_SCHEMAS is what load_table reads under instead of
+    inferring from the footer, so it must equal what a default session
+    infers — field names, order, types and nullability. The one declared
+    difference: events.ts is pinned to TimestampType (EVENTS_RAW_SCHEMA)
+    although the footer infers TIMESTAMP_NTZ; every events consumer is
+    written against the zoned type, and the pin makes a NANOS regen fail
+    loudly instead of shifting timestamps."""
+    from pyspark.sql import types as T
+
+    from itdb_spark.catalog import TESTDATA_SCHEMAS
+
+    root = os.path.dirname(SF_DIR)  # the sibling sf dirs
+    for t, declared in TESTDATA_SCHEMAS.items():
+        inferred = spark.read.parquet(os.path.join(root, sf, f"{t}.parquet")).schema
+        if t == "events":
+            assert inferred["ts"] == T.StructField("ts", T.TimestampNTZType(), True)
+            assert declared["ts"] == T.StructField("ts", T.TimestampType(), True)
+            inferred = T.StructType(
+                [declared["ts"] if f.name == "ts" else f for f in inferred.fields]
+            )
+        assert inferred == declared, (sf, t, inferred.simpleString())

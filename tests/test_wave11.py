@@ -233,20 +233,22 @@ def test_kmeans_empty_cluster_keeps_centroid(spark, tmp_path):
     the run must still terminate with every vector assigned (the
     empty-cluster fallback keeps the stale centroid instead of
     crashing or dividing by zero)."""
-    import pandas as pd
-
+    from itdb_spark.catalog import TESTDATA_SCHEMAS
     from itdb_spark.queries.pipeline import _emb_kmeans_impl
 
     vecs = []
     for vid in range(8):
         base = 0.9 if vid % 2 == 0 else -0.9
         vecs.append((vid, [base + vid * 1e-7] * 64, 0))
-    pdf = pd.DataFrame(vecs, columns=["vec_id", "embedding", "label"])
     sf = str(tmp_path / "sf")
     import os
 
     os.makedirs(sf)
-    spark.createDataFrame(pdf).write.parquet(os.path.join(sf, "embeddings.parquet"))
+    # written in the testdata layout (float vectors, int label): tables
+    # load under their declared catalog schema, which a drifted file fails
+    spark.createDataFrame(vecs, TESTDATA_SCHEMAS["embeddings"]).write.parquet(
+        os.path.join(sf, "embeddings.parquet")
+    )
     # satisfy Tables() lazily — only embeddings is read by the impl
     out = _emb_kmeans_impl(spark, sf).collect()
     assert len(out) == 8
